@@ -283,12 +283,10 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
                                       ds.max_timestamp)
                 result = engine.run(
                     df, query, with_stats=True,
-                    max_group_rows=ds.max_group_rows,
                     total_rows=ds.total_rows or None,
-                    group_rows_topk=getattr(ds, "group_rows_topk", None),
-                    segmented_cost_premium=getattr(
-                        ds, "segmented_cost_premium", None),
-                    layout=getattr(ds, "layout", None))
+                    group_rows_topk=ds.group_rows_topk,
+                    segmented_cost_premium=ds.segmented_cost_premium,
+                    layout=ds.layout)
             except Exception:
                 _prom.record_query(name, False, time.monotonic() - t0)
                 raise
@@ -333,13 +331,10 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
                 try:
                     holder["result"] = engine.run(
                         df, query, with_stats=True,
-                        max_group_rows=ds.max_group_rows,
                         total_rows=ds.total_rows or None,
-                        group_rows_topk=getattr(ds, "group_rows_topk",
-                                                None),
-                        segmented_cost_premium=getattr(
-                            ds, "segmented_cost_premium", None),
-                        layout=getattr(ds, "layout", None))
+                        group_rows_topk=ds.group_rows_topk,
+                        segmented_cost_premium=ds.segmented_cost_premium,
+                        layout=ds.layout)
                 except Exception as e:  # surfaced in the stream tail
                     holder["error"] = str(e)
                 finally:

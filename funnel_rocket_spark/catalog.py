@@ -82,22 +82,19 @@ class Dataset:
     validation_mode: str = "full"
     files_validated: Optional[int] = None
     files_total: Optional[int] = None
-    # Largest single group's row count over the VALIDATED files (exact for
-    # validation_mode="full", a sampled estimate otherwise). Plan-time skew
-    # routing reads this: per-group sequence/funnel paths serialize each
-    # group into one task, so a whale group past QueryPlan's
-    # whale_row_threshold flips sequence_strategy="auto" to the segmented
-    # fold (see planner.compiler.QueryPlan) — the Spark restatement of
-    # "the optimizer, not the user, picks the skew-safe plan".
+    # Largest single group's row count, as written by catalogs that
+    # predate group_rows_topk. Kept so their saved JSON still loads;
+    # load_dataset migrates it into group_rows_topk.
     max_group_rows: Optional[int] = None
-    # Top-K largest group sizes descending (group_rows_topk[0] ==
-    # max_group_rows) — the r11 group-size HISTOGRAM head. With this +
-    # total_rows the planner routes sequence strategies on MODELED task
-    # cost (estimated slowest window task vs the segmented fold's bounded
-    # task × measured premium) instead of the binary max>threshold test,
-    # which over-routed a 20M whale the external sort absorbs 3× faster
-    # (tools/rung_whale_100m_r10.json). Same sampled-extrapolation rule
-    # as max_group_rows under partial validation.
+    # Top-K largest group sizes descending over the VALIDATED files
+    # (exact for validation_mode="full", a sampled estimate otherwise) —
+    # the group-size HISTOGRAM head. Plan-time skew routing reads this:
+    # window anchors serialize each group into one task, so with this +
+    # total_rows the planner routes sequence_strategy="auto" on MODELED
+    # task cost (estimated slowest window task vs the segmented fold's
+    # bounded task × measured premium; see planner.compiler.QueryPlan) —
+    # the Spark restatement of "the optimizer, not the user, picks the
+    # skew-safe plan".
     group_rows_topk: Optional[list[int]] = None
     # r12: the segmented fold's per-row cost premium over the window
     # sort, MEASURED on this dataset at registration
@@ -454,8 +451,7 @@ def register_dataset(
             # per partition merged on the driver, never a full sort; one
             # extra registration-time job). QueryPlan's auto
             # sequence-strategy routing models task cost from this
-            # histogram head; max_group_rows stays as topk[0] for
-            # backward compatibility with saved catalogs.
+            # histogram head.
             topk = [r["__c"] for r in
                     (df_val.groupBy(group_id_column)
                      .agg(F.count(F.lit(1)).alias("__c"))
@@ -472,7 +468,6 @@ def register_dataset(
                 scale = len(files) / max(len(val_files), 1)
                 topk = [int(c * scale) for c in topk]
             ds.group_rows_topk = [int(c) for c in topk] or None
-            ds.max_group_rows = int(topk[0]) if topk else None
             if calibrate_premium:
                 cal = measure_segmented_premium(
                     spark, df_val, group_id_column, timestamp_column)
@@ -526,6 +521,11 @@ def register_dataset(
 def load_dataset(catalog_dir: str, name: str) -> Dataset:
     with open(os.path.join(catalog_dir, f"{name}.json")) as fh:
         data = json.load(fh)
+    if data.get("max_group_rows") and not data.get("group_rows_topk"):
+        # an entry saved before the group-size histogram existed: its
+        # largest group is a one-entry histogram head, so the planner's
+        # cost model routes it like any other dataset
+        data["group_rows_topk"] = [data["max_group_rows"]]
     return Dataset(**data)
 
 

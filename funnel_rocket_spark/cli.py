@@ -142,13 +142,10 @@ def cmd_run(args) -> int:
         spark = get_spark()
         engine = QueryEngine(ds.group_id_column, ds.timestamp_column)
         result = engine.run(ds.load(spark), query,
-                            max_group_rows=ds.max_group_rows,
                             total_rows=ds.total_rows or None,
-                            group_rows_topk=getattr(ds, "group_rows_topk",
-                                                    None),
-                            segmented_cost_premium=getattr(
-                                ds, "segmented_cost_premium", None),
-                            layout=getattr(ds, "layout", None))
+                            group_rows_topk=ds.group_rows_topk,
+                            segmented_cost_premium=ds.segmented_cost_premium,
+                            layout=ds.layout)
     except QueryValidationError as e:
         print(f"error: invalid query: {e}", file=sys.stderr)
         return 1

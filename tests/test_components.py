@@ -53,13 +53,44 @@ def test_catalog_roundtrip(spark, tmp_path):
     assert loaded.group_id_column == "uid"
     assert loaded.columns["price"]["coltype"] == "FLOAT"
     assert loaded.columns["price"]["max"] == pytest.approx(148.5)
-    # whale-detector profile stat: 100 rows over 10 uids = 10 each,
-    # exact, and it survives the JSON roundtrip (old catalog files
-    # without the key load as None)
-    assert loaded.max_group_rows == 10
-    # r11 histogram head: all 10 groups (≤ GROUP_TOPK) descending,
-    # max_group_rows stays its first entry
+    # whale-detector profile: 100 rows over 10 uids = 10 each, exact,
+    # all 10 groups (≤ GROUP_TOPK) descending, and it survives the JSON
+    # roundtrip
     assert loaded.group_rows_topk == [10] * 10
+
+
+def test_catalog_migrates_max_only_whale_profile(spark, tmp_path):
+    """A catalog entry written before the group-size histogram carries
+    only ``max_group_rows``: it loads as a one-entry ``group_rows_topk``
+    so the planner's cost model routes it like any other dataset."""
+    from funnel_rocket_spark.catalog import load_dataset
+    from funnel_rocket_spark.engine import QueryEngine
+
+    src = tmp_path / "data"
+    spark.range(100).select(
+        (F.col("id") % 10).alias("uid"), F.col("id").alias("ts"),
+        (F.col("id") % 3).alias("kind"),
+    ).write.parquet(str(src))
+    cat = tmp_path / "cat"
+    cat.mkdir()
+    (cat / "old.json").write_text(json.dumps({
+        "name": "old", "basepath": str(src), "group_id_column": "uid",
+        "timestamp_column": "ts", "total_rows": 10**8,
+        "max_group_rows": 95_000_000}))
+    loaded = load_dataset(str(cat), "old")
+    assert loaded.group_rows_topk == [95_000_000]
+
+    q = {"query": {"conditions": [{"sequence": [
+        {"filter": ["kind", "==", 0]}, {"filter": ["kind", "==", 1]}]}]}}
+    df = loaded.load(spark)
+    eng = QueryEngine("uid", "ts", segmented_cost_premium=1.5)
+    ref = eng.run(df, q)
+    got = eng.run(df, q, with_stats=True, total_rows=loaded.total_rows,
+                  group_rows_topk=loaded.group_rows_topk)
+    st = got["stats"]["strategies"]
+    assert st["autoRouteReason"] == "cost_model"
+    assert st["sequence"] == "fold_segmented"
+    assert got["query"] == ref["query"]
 
 
 def test_premium_calibration_measured_and_persisted(spark, tmp_path):
@@ -184,8 +215,7 @@ def test_catalog_partial_validation_modes(spark, tmp_path):
     # whale estimate EXTRAPOLATES under partial validation (a subset max
     # underestimates in the unsafe direction): subset max is 40 rows/uid
     # over 2 files -> x6/2 = 120, matching the true full-scan 100/uid
-    # within the uniform-spread assumption (and erring protective)
-    assert ds.max_group_rows == 40 * 6 // 2
+    # within the uniform-spread assumption (and erring protective), and
     # the whole histogram head extrapolates the same way
     assert ds.group_rows_topk == [40 * 6 // 2] * 5
 

@@ -4,7 +4,7 @@ measurement this sandbox's ambient drift cannot fool (see
 OPTIMIZATION_r12.md's measurement honesty note).
 
 Usage:
-    python tools/ab_r13.py --env FRS_SPREAD_MODE --a '' --b rr \
+    python tools/ab_r13.py --env FRS_SPREAD_MAX_BYTES --a '' --b 0 \
         --runs 3 query [query ...]
 
 --a/--b are values for the toggle env var (empty string = unset).

@@ -906,19 +906,18 @@ def _gc_between_runs(spark) -> None:
 
 def whale_main(n_rows: int, whale_every: int = 5) -> None:
     """Round-9 rung: WHALE-GROUP skew for the per-group sequence/funnel
-    paths. Both strategies partition by group (window sort or
-    collect_list fold), so one bot group holding 1/whale_every of a
-    100M-row stream serializes into a single task — the reference had
-    the same property (group-per-file invariant), but the engine should
-    PROVE the behavior rather than assume it: the window path's
-    partition sort is an EXTERNAL sort (spills, finishes); the fold
-    path's collect_list buffers the whale group as one in-memory array
-    (the known cliff — measured here, not hidden).
+    paths. Window anchors partition by group, so one bot group holding
+    1/whale_every of a 100M-row stream serializes into a single task —
+    the reference had the same property (group-per-file invariant), but
+    the engine should PROVE the behavior rather than assume it: the
+    window path's partition sort is an EXTERNAL sort (spills,
+    finishes); the segmented fold splits the whale across ts-range
+    segments at a per-row premium.
 
-    Prints timings for sequence-3step and funnel-step-counts under both
-    strategies on (uniform, whale) streams of the same size, the skew
-    factor (whale/uniform), and cross-strategy equality of every result
-    on the whale stream."""
+    Prints timings for the sequence and funnel queries under window,
+    fold_segmented and auto on (uniform, whale) streams of the same
+    size, the skew factor (whale/uniform), and cross-strategy equality
+    of every result on the whale stream."""
     n_groups = max(1, n_rows // 100)  # mean group ≈ 100 events
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     upath = os.path.join(here, ".scratch",
@@ -955,7 +954,7 @@ def whale_main(n_rows: int, whale_every: int = 5) -> None:
                       {"filter": ["event_type", "==", "purchase"]}],
          "maxDuration": 30 * NANOS_DAY}]}}
     # rowFound:false × whale: the r11 anchor-chain segmented form —
-    # fold/fold_segmented-as-exit-table can't express lookahead, so this
+    # the exit-table fold can't express lookahead, so this
     # row is the evidence that absence plans now have a whale-safe shape
     # (and what the window path costs on the same whale)
     abs_q = {"query": {"conditions": [
@@ -979,16 +978,12 @@ def whale_main(n_rows: int, whale_every: int = 5) -> None:
         topk = [r["c"] for r in
                 (ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
                  .orderBy(F.desc("c")).limit(16).collect())]
-        hint = topk[0] if topk else None
-        out[f"max_group_rows.{dist}"] = hint
         out[f"group_rows_topk.{dist}"] = topk[:3]
 
         def run_once(strat, qname, q, record_route):
             expanded = eng.expand(q, ev)
             plan = QueryPlan(ev, expanded, "user_id", "ts",
                              sequence_strategy=strat,
-                             max_group_rows_hint=(
-                                 hint if strat == "auto" else None),
                              total_rows_hint=(
                                  n_rows if strat == "auto" else None),
                              group_rows_topk_hint=(
@@ -1049,9 +1044,8 @@ def whale_main(n_rows: int, whale_every: int = 5) -> None:
         print(f"# {dist}: warm-up {time.perf_counter()-t0:.1f}s",
               file=sys.stderr)
         combos = [(strat, qname, q)
-                  for strat in ("window", "fold", "fold_segmented", "auto")
-                  for qname, q in qlist
-                  if not (qname == "sequence_absence" and strat == "fold")]
+                  for strat in ("window", "fold_segmented", "auto")
+                  for qname, q in qlist]
         for rnd, order in enumerate((combos, list(reversed(combos)))):
             for strat, qname, q in order:
                 key = f"{dist}.{qname}.{strat}"
@@ -1078,13 +1072,13 @@ def whale_main(n_rows: int, whale_every: int = 5) -> None:
     for dist in ("uniform", "whale"):
         for qname in qnames:
             vals = [out["results"].get(f"{dist}.{qname}.{s_}")
-                    for s_ in ("window", "fold", "fold_segmented", "auto")
+                    for s_ in ("window", "fold_segmented", "auto")
                     if f"{dist}.{qname}.{s_}" in out["results"]]
             out["equal"][f"{dist}.{qname}"] = (
                 all(v == vals[0] for v in vals)
                 and not isinstance(vals[0], str))
     out["skew_factor"] = {}
-    for strat in ("window", "fold", "fold_segmented", "auto"):
+    for strat in ("window", "fold_segmented", "auto"):
         for qname in qnames:
             u = out["timings"].get(f"uniform.{qname}.{strat}")
             w = out["timings"].get(f"whale.{qname}.{strat}")
@@ -1097,7 +1091,7 @@ def whale_main(n_rows: int, whale_every: int = 5) -> None:
     for dist in ("uniform", "whale"):
         for qname in qnames:
             best = min((out["timings"].get(f"{dist}.{qname}.{s}") or 1e18)
-                       for s in ("window", "fold", "fold_segmented"))
+                       for s in ("window", "fold_segmented"))
             a = out["timings"].get(f"{dist}.{qname}.auto")
             out["auto_vs_best"][f"{dist}.{qname}"] = (
                 round(a / best, 2) if a and best < 1e18 else None)
